@@ -394,9 +394,10 @@ def process_tiles(
         # a caller-known tile count caps the explicit exchange at one
         # partition per tile (the useful maximum): each surplus partition is
         # an EMPTY mapInPandas task that still pays the full python-worker
-        # protocol round trip (measured ~10 ms each — 64 empty tasks ≈
-        # 0.7 s on the 64-tile bench table). Big jobs are unaffected: the
-        # 4×cores term governs as soon as tiles ≥ 4×cores (guide §2).
+        # task round trip (event log, 4-core box: 0.17-0.35 s per empty
+        # task before the zip-directory guard in dsm2dtm_spark/__init__.py,
+        # 0.07-0.1 s after). Big jobs are unaffected: the 4×cores term
+        # governs as soon as tiles ≥ 4×cores (guide §2).
         n_parts = max(min(n_parts, n_tiles_hint), N_SALT)
     # repartition FIRST, attach the broadcast stats on the reduce side (r7):
     # with the join below the exchange, the stats broadcast build sat in the
@@ -535,9 +536,9 @@ def stitch(processed: DataFrame, n_images_hint: int | None = None) -> DataFrame:
     n_parts = max(4 * processed.sparkSession.sparkContext.defaultParallelism, 1)
     if n_images_hint is not None:
         # one partition per image is the assembly-parallelism ceiling —
-        # surplus partitions are empty applyInPandas tasks (same ~10 ms
-        # python-protocol cost as process_tiles; 124 of 128 tasks were
-        # empty on the 4-image bench table)
+        # surplus partitions are empty applyInPandas tasks (same per-task
+        # python cost as process_tiles; 124 of 128 tasks were empty on the
+        # 4-image bench table)
         n_parts = max(min(n_parts, n_images_hint), 1)
     processed = processed.repartition(n_parts, "image_id")
     return processed.groupBy("image_id").applyInPandas(assemble, STITCHED_SCHEMA)
