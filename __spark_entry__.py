@@ -761,9 +761,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def docs_minhash_near_dups(spark, sf):
         # the FULL MinHash-LSH pipeline (signatures → banded candidates →
-        # exact Jaccard verify) in its md5 flavor — every step replays in
-        # DuckDB, so this graduated from rows-only to hash-checked in r4;
-        # the xxhash64 production flavor stays pinned by the flood pytests.
+        # exact Jaccard verify) with md5 signatures and band buckets — every
+        # step replays in DuckDB, so this graduated from rows-only to
+        # hash-checked in r4; the flood guards stay pinned by the pytests.
         # shingle_n=5 (r6): background 3-gram Jaccard between UNRELATED
         # same-language docs is ~0.19, which makes the banded candidate set
         # quadratic in corpus size (~11M false pairs at sf1's 50k docs —
@@ -774,7 +774,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         d = _t(spark, sf, "documents").repartition(spark.sparkContext.defaultParallelism)
         return minhash_near_dups(
-            d, threshold=0.6, n_hashes=16, bands=4, method="md5", shingle_n=5
+            d, threshold=0.6, n_hashes=16, bands=4, shingle_n=5
         )
 
     q["docs_minhash_near_dups"] = docs_minhash_near_dups
@@ -821,9 +821,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # exists for the production small-batch-vs-huge-store ingest and its
         # driver round-trips only pay off when the store dwarfs the batch
         # (measured min-of-3 interleaved at sf0.1: 5.7 s vs 8.2 s here).
-        sigs = sign_documents(corpus, method="md5").localCheckpoint(eager=False)
+        sigs = sign_documents(corpus).localCheckpoint(eager=False)
         decisions, _ = dedup_against(
-            fresh, sigs, band_buckets(sigs), method="md5", threshold=0.75, broadcast_fresh=False
+            fresh, sigs, band_buckets(sigs), threshold=0.75, broadcast_fresh=False
         )
         return decisions.select("doc_id", "verdict")
 
@@ -875,14 +875,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         spark.sql(f"DROP TABLE IF EXISTS {store.sig_table}")
         spark.sql(f"DROP TABLE IF EXISTS {store.bands_table}")
         store.append(
-            sign_documents(corpus, method="md5"),
+            sign_documents(corpus),
             summary={"sig_params": {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": "md5"}},
         )
         decisions, _ = dedup_against(
             fresh,
             store.read_signatures(spark),
             store.read_bands(spark),
-            method="md5",
             threshold=0.75,
             broadcast_fresh=False,
         )
@@ -979,7 +978,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from dsm2dtm_spark.operators.dedup import simhash64
 
         d = _t(spark, sf, "documents").repartition(spark.sparkContext.defaultParallelism)
-        return simhash64(d, method="md5")
+        return simhash64(d)
 
     q["docs_simhash"] = docs_simhash
 

@@ -127,19 +127,19 @@ def cmd_incdedup():
     out = {}
     spark.sparkContext.setJobDescription("incdedup: sign corpus")
     t0 = time.time()
-    sigs = sign_documents(corpus, method="md5").localCheckpoint(eager=True)
+    sigs = sign_documents(corpus).localCheckpoint(eager=True)
     out["sign_corpus"] = round(time.time() - t0, 2)
 
     spark.sparkContext.setJobDescription("incdedup: sign fresh (isolated)")
     t0 = time.time()
-    fsig_probe = sign_documents(fresh, method="md5")
+    fsig_probe = sign_documents(fresh)
     fsig_probe.write.format("noop").mode("overwrite").save()
     out["sign_fresh_isolated"] = round(time.time() - t0, 2)
 
     bands = band_buckets(sigs)
     spark.sparkContext.setJobDescription("incdedup: candidates only")
     t0 = time.time()
-    fsig = sign_documents(fresh, method="md5").localCheckpoint(eager=True)
+    fsig = sign_documents(fresh).localCheckpoint(eager=True)
     out["sign_fresh_chk"] = round(time.time() - t0, 2)
     fb = band_buckets(fsig)
     cb = bands.select(F.col("doc_id").alias("_cid"), "band", "bucket")
@@ -175,7 +175,7 @@ def cmd_incdedup():
     spark.sparkContext.setJobDescription("incdedup: full dedup_against")
     t0 = time.time()
     decisions, _ = dedup_against(
-        fresh, sigs, band_buckets(sigs), method="md5", threshold=0.75, broadcast_fresh=False
+        fresh, sigs, band_buckets(sigs), threshold=0.75, broadcast_fresh=False
     )
     decisions.select("doc_id", "verdict").write.format("noop").mode("overwrite").save()
     out["full_dedup_against"] = round(time.time() - t0, 2)

@@ -3,9 +3,11 @@ alongside SURVEY.md §2): exact, n-gram Jaccard, MinHash+LSH, SimHash.
 
 Scale notes (the 100 TB framing):
 - exact dedup is a hash groupBy on a fingerprint — one shuffle, no payloads;
-- MinHash+LSH: signature computation is embarrassingly parallel (explode
-  shingles → groupBy min per hash — all JVM); candidate generation buckets
-  signatures by (band, band-hash) so the join is an equi-join, never O(n²);
+- MinHash+LSH: signature computation is embarrassingly parallel (one
+  Arrow-batched md5 string-MinHash projection per row, no shuffle —
+  incremental.minhash_signatures_md5); candidate generation buckets
+  signatures by (band, md5 of the band slice) so the join is an equi-join,
+  never O(n²);
 - SimHash: 64-bit fingerprint; near-dup = small Hamming distance within
   bucketed prefixes;
 - n-gram Jaccard is the exact verifier applied only to LSH candidates;
@@ -20,10 +22,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-# Mersenne prime 2^31−1: after reducing the 64-bit shingle hash mod P, the
-# affine permutation (a·h+b) stays ≤ ~2^37 — no int64 overflow under ANSI mode
-MERSENNE_P = (1 << 31) - 1
-
+from dsm2dtm_spark.operators.incremental import minhash_signatures_md5
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Keep one row per distinct text (md5 fingerprint, smallest id wins) —
@@ -137,36 +136,16 @@ def ngram_jaccard(df_pairs: DataFrame, left_text: str, right_text: str, n: int =
     return df_pairs.withColumn("jaccard", F.round(inter / union, 4))
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n_hashes: int = 32, shingle_n: int = 3
-) -> DataFrame:
-    """MinHash signatures: shingle → xxhash64 → k affine permutations
-    (aᵢ·h+bᵢ mod Mersenne61) → min per permutation. One explode + one groupBy
-    (map-side partial min), signature as array<bigint>.
-
-    Deterministic: permutation coefficients derive from the hash index."""
-    hs = df.select(id_col, F.explode(shingle_expr(text_col, shingle_n)).alias("sh")).withColumn(
-        "h", F.pmod(F.xxhash64("sh"), F.lit(MERSENNE_P))
-    )
-    aggs = []
-    for i in range(n_hashes):
-        a = 2 * i + 1  # odd multipliers (small, keeps a·h below 2^37)
-        b = (1442695040888963407 + i * 6364136223846793005) % MERSENNE_P
-        aggs.append(F.min((F.col("h") * a + b) % MERSENNE_P).alias(f"mh_{i}"))
-    sig = hs.groupBy(id_col).agg(*aggs)
-    return sig.select(id_col, F.array(*[f"mh_{i}" for i in range(n_hashes)]).alias("signature"))
-
-
 def minhash_lsh_candidates(
     signatures: DataFrame,
     id_col: str = "doc_id",
     bands: int = 8,
     rows_per_band: int = 4,
     bucket_cap: int | None = None,
-    bucket_method: str = "xxhash64",
 ) -> DataFrame:
     """LSH banding: split each signature into ``bands`` bands of
-    ``rows_per_band`` values, bucket by (band, hash(band slice)), self-join
+    ``rows_per_band`` values, bucket by (band, md5 of the '|'-joined band
+    slice — SQL-replayable as md5(string_agg(comp, '|' ORDER BY i))), self-join
     buckets → distinct candidate pairs (left id < right id). Equi-join only —
     the candidate step never goes quadratic in table size.
 
@@ -187,11 +166,7 @@ def minhash_lsh_candidates(
     )
     def bucket_of(i):
         sl = F.slice("signature", i * rows_per_band + 1, rows_per_band)
-        if bucket_method == "md5":
-            # SQL-replayable: md5 over the '|'-joined stringified slice
-            # (DuckDB: md5(string_agg(comp, '|' ORDER BY i)))
-            return F.md5(F.array_join(F.transform(sl, lambda x: x.cast("string")), "|"))
-        return F.xxhash64(sl.cast("string")).cast("string")
+        return F.md5(F.array_join(F.transform(sl, lambda x: x.cast("string")), "|"))
 
     b = reps.select(
         "_rep",
@@ -240,15 +215,13 @@ def minhash_near_dups(
     n_hashes: int = 32,
     bands: int = 4,
     bucket_cap: int | None = None,
-    method: str = "xxhash64",
     shingle_n: int = 3,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: signatures → banded candidates →
     exact n-gram-Jaccard verification ≥ threshold. ``bucket_cap`` bounds
     candidate generation under near-dup floods (see minhash_lsh_candidates).
-    ``method='md5'`` uses the string-MinHash signature + md5 band buckets —
-    every step SQL-replayable (the DuckDB-oracle flavor; xxhash64 stays the
-    fast production default).
+    Signatures are the md5 string MinHash and band buckets md5 of the band
+    slice, so every step is SQL-replayable (the DuckDB oracles replay it).
 
     ``shingle_n`` sets the character-shingle length for BOTH the signatures
     and the verify. Pick it against the corpus' background similarity: on
@@ -263,19 +236,12 @@ def minhash_near_dups(
     onto the candidate pairs instead of re-shingling text per pair — a doc
     in k candidate pairs previously paid k interpreted O(len·grams)
     transforms, the measured sf1 hot spot."""
-    if method == "md5":
-        from dsm2dtm_spark.operators.incremental import minhash_signatures_md5
-
-        sig = minhash_signatures_md5(df, text_col, id_col, n_hashes, shingle_n)
-    else:
-        sig = minhash_signatures(df, text_col, id_col, n_hashes, shingle_n)
+    sig = minhash_signatures_md5(df, text_col, id_col, n_hashes, shingle_n)
     # the signing feeds the candidate generator's collapse/member/band
     # subtrees; materialize it once (the candidate step re-derives the
     # relation three times otherwise)
     sig = sig.localCheckpoint(eager=False)
-    cand = minhash_lsh_candidates(
-        sig, id_col, bands, n_hashes // bands, bucket_cap=bucket_cap, bucket_method=method
-    )
+    cand = minhash_lsh_candidates(sig, id_col, bands, n_hashes // bands, bucket_cap=bucket_cap)
     grams = df.select(F.col(id_col), shingle_expr(text_col, shingle_n).alias("_grams"))
     pairs = (
         cand.join(
@@ -365,36 +331,32 @@ def connected_components(
     return labels.select(F.col("vid").alias(id_col), F.col("label").alias("cluster_id"))
 
 
-def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", method: str = "xxhash64") -> DataFrame:
+def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """64-bit SimHash over whitespace tokens: per bit, sum ±1 weighted by
     token hash bit, sign → bit. Explode + groupBy with 64 conditional sums,
-    all JVM. ``method='md5'`` draws the 64 token-hash bits from two 32-bit
-    halves of the token's md5 hex (conv(hex,16,10) — exactly replayable in
-    DuckDB via ('0x'||substr(md5(tok),…))::BIGINT, the oracle flavor);
-    xxhash64 stays the fast production default.
+    all JVM. The 64 token-hash bits come from two 32-bit halves of the
+    token's md5 hex (conv(hex,16,10) — exactly replayable in DuckDB via
+    ('0x'||substr(md5(tok),…))::BIGINT, the oracle flavor).
 
-    COMPATIBILITY: since round 4 BOTH methods tokenize with ``tokens_ws``
-    (single-space split, the engine-wide canonical tokenizer); earlier
-    rounds split the xxhash64 flavor on ``\\s+``, so texts containing
-    tabs/newlines/runs of spaces hash differently now. SimHash values
-    persisted by a pre-round-4 build are NOT comparable with new output —
-    re-sign the corpus rather than mixing vintages in one hamming join."""
+    COMPATIBILITY: SimHash values persisted by older builds under the
+    former default (non-md5) token hash, or by a pre-round-4 build (which
+    split on ``\\s+`` rather than ``tokens_ws``'s single space), are NOT
+    comparable with this output — re-sign the corpus rather than mixing
+    vintages in one hamming join."""
     from dsm2dtm_spark.functions.text import tokens_ws
 
     # canonical single-space tokenization (tokens_ws) — same split as the
     # quality gate, decontam, and every DuckDB oracle
-    toks = df.select(id_col, F.explode(tokens_ws(F.col(text_col))).alias("tok"))
-    if method == "md5":
-        toks = toks.withColumn(
-            "h1", F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
-        ).withColumn("h2", F.conv(F.substring(F.md5("tok"), 9, 8), 16, 10).cast("long"))
-        def bit(i):
-            col = F.col("h1") if i < 32 else F.col("h2")
-            return F.shiftright(col, i % 32).bitwiseAND(F.lit(1))
-    else:
-        toks = toks.withColumn("h", F.xxhash64("tok"))
-        def bit(i):
-            return F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1))
+    toks = (
+        df.select(id_col, F.explode(tokens_ws(F.col(text_col))).alias("tok"))
+        .withColumn("h1", F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long"))
+        .withColumn("h2", F.conv(F.substring(F.md5("tok"), 9, 8), 16, 10).cast("long"))
+    )
+
+    def bit(i):
+        col = F.col("h1") if i < 32 else F.col("h2")
+        return F.shiftright(col, i % 32).bitwiseAND(F.lit(1))
+
     sums = [
         F.sum(F.when(bit(i) == 1, 1).otherwise(-1)).alias(f"b{i}")
         for i in range(64)

@@ -17,13 +17,13 @@ tables (sources.manifest), and each fresh batch joins against them:
 3. commit — survivors' signatures/bands append to the store, so the next
    batch dedups against corpus + this batch (associative by construction).
 
-Signatures come in two flavors:
-- ``method='xxhash64'`` (default): the fast JVM path of
-  ``dedup.minhash_signatures`` — production.
-- ``method='md5'``: string MinHash (component i = MIN over shingles of
-  md5('i:' || shingle)) — ~2× the hash cost, but every step is exactly
-  replayable in ANSI SQL/DuckDB (md5 + min-over-varchar + string_agg), so
-  the whole incremental pipeline is oracle-checkable, not rows-only.
+Signatures have ONE flavor: string MinHash (component i = MIN over the
+document's distinct shingles of md5('i:' || shingle)), signed by an
+Arrow-batched UDF with a per-worker gram cache. Every step is exactly
+replayable in ANSI SQL/DuckDB (md5 + min-over-varchar + string_agg), so the
+whole incremental pipeline is oracle-checkable, not rows-only. Stores record
+``"method": "md5"`` in their ``sig_params``; a store signed by an older
+build's other flavor fails ``check_params`` and must be rebuilt.
 
 Reference anchor: the resume anti-join of plans/dtm_job.py:141 applied to
 the dedup domain; no reference-repo equivalent (engine extension).
@@ -35,8 +35,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, StringType
 
-from dsm2dtm_spark.operators.dedup import minhash_signatures
 from dsm2dtm_spark.sources.manifest import SnapshotTable
+
+# the one signing flavor, recorded in every store's sig_params
+SIG_METHOD = "md5"
 
 # per-worker gram → md5-component cache for the string-MinHash UDF (guide
 # §4.5: heavyweight state once per task — here once per *worker*, since
@@ -177,29 +179,25 @@ def sign_documents(
     id_col: str = "doc_id",
     n_hashes: int = 16,
     shingle_n: int = 3,
-    method: str = "xxhash64",
 ) -> DataFrame:
     """(id, fingerprint, signature) for a document batch — the rows a
-    SignatureStore persists. ``fingerprint`` = md5(text) (the exact-dup key,
-    SQL-replayable in both flavors); ``signature`` is the MinHash array in
-    the chosen ``method`` (see module docstring).
+    SignatureStore persists. ``fingerprint`` = md5(text) (the exact-dup key);
+    ``signature`` is the md5 string MinHash (see module docstring).
 
-    The md5 flavor signs in ONE projection (r7): fingerprint and signature
-    both derive from the current row, so the old fingerprint⋈signature
-    self-join (an Exchange pair per signing) is gone. The xxhash64 flavor
-    keeps the join — its signature is a real explode/groupBy aggregate."""
-    if method == "md5":
-        sig = _md5_minhash_sig_udf(n_hashes, shingle_n)
-        return df.filter(F.col(text_col).isNotNull()).select(
-            F.col(id_col),
-            F.md5(F.col(text_col)).alias("fingerprint"),
-            sig(F.lower(F.col(text_col))).alias("signature"),
-        )
-    if method != "xxhash64":
-        raise ValueError(f"method must be 'xxhash64' or 'md5', got {method!r}")
-    sig = minhash_signatures(df, text_col, id_col, n_hashes, shingle_n)
-    fp = df.select(F.col(id_col), F.md5(F.col(text_col)).alias("fingerprint"))
-    return fp.join(sig, on=id_col)
+    Signs in ONE projection (r7): fingerprint and signature both derive
+    from the current row — no join, no Exchange."""
+    sig = _md5_minhash_sig_udf(n_hashes, shingle_n)
+    return df.filter(F.col(text_col).isNotNull()).select(
+        F.col(id_col),
+        F.md5(F.col(text_col)).alias("fingerprint"),
+        sig(F.lower(F.col(text_col))).alias("signature"),
+    )
+
+
+def _sig_params(n_hashes: int, bands: int, shingle_n: int = 3) -> dict:
+    """The ``sig_params`` a store records at every append and compares in
+    ``check_params``."""
+    return {"n_hashes": n_hashes, "bands": bands, "shingle_n": shingle_n, "method": SIG_METHOD}
 
 
 def band_buckets(
@@ -211,8 +209,8 @@ def band_buckets(
 ) -> DataFrame:
     """Explode (id, signature) → narrow (id, band, bucket) LSH band rows.
     bucket = md5 of the band's '|'-joined components — one string expression
-    that covers both signature flavors (bigint arrays stringify first) and
-    replays in DuckDB as md5(string_agg(comp, '|' ORDER BY i)).
+    (non-string components stringify first) that replays in DuckDB as
+    md5(string_agg(comp, '|' ORDER BY i)).
 
     ``carry_signature=True`` keeps the signature array on each band row
     (4× payload duplication) — used by the shuffle-path verify so the
@@ -364,18 +362,20 @@ class SignatureStore:
         snap = self.signatures.current_snapshot()
         return (snap.summary or {}).get("sig_params", {}) if snap else {}
 
-    def check_params(self, n_hashes: int, bands: int, shingle_n: int, method: str) -> None:
+    def check_params(self, n_hashes: int, bands: int, shingle_n: int) -> None:
         """Fail fast when a batch's signature parameters differ from the
         store's: mismatched n_hashes would zip NULL-padded signatures and
         silently UNDERESTIMATE every Jaccard (near-dups leak through), and a
-        different hash method/shingle size makes buckets incomparable."""
-        want = {"n_hashes": n_hashes, "bands": bands, "shingle_n": shingle_n, "method": method}
+        different hash method/shingle size makes buckets incomparable — a
+        store an older build signed with a removed flavor can only be
+        rebuilt."""
+        want = _sig_params(n_hashes, bands, shingle_n)
         have = self.params()
         if have and have != want:
             raise ValueError(
                 f"SignatureStore at {self.root} was built with {have}; this "
-                f"batch uses {want} — signatures would be incomparable. "
-                "Rebuild the store or match its parameters."
+                f"batch uses {want} — signatures would be incomparable. Match "
+                f"its parameters or rebuild the store (signing is {SIG_METHOD!r} only)."
             )
 
     def _known_n_hashes(self, summary: dict | None) -> int | None:
@@ -1057,7 +1057,6 @@ def dedup_against(
     n_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    method: str = "xxhash64",
     bucket_cap: int | None = None,
     materialize_fresh: bool = True,
     broadcast_fresh: bool = True,
@@ -1141,9 +1140,7 @@ def dedup_against(
     # and the returned keep_sigs); lazy-checkpoint so it executes once.
     # ``materialize_fresh=False`` keeps the raw lineage visible — used by
     # the no-reshingle PLAN test, which must see the shingle expressions
-    fresh_sigs = sign_documents(
-        remaining, text_col, id_col, n_hashes=n_hashes, shingle_n=shingle_n, method=method
-    )
+    fresh_sigs = sign_documents(remaining, text_col, id_col, n_hashes=n_hashes, shingle_n=shingle_n)
     if materialize_fresh:
         fresh_sigs = fresh_sigs.localCheckpoint(eager=False)
     if hot_buckets is not None:
@@ -1217,18 +1214,17 @@ def dedup_against(
             carry_signature=True,
             n_hashes=n_hashes,
         ).withColumnRenamed("signature", "_csig")
-        if method == "md5":
-            # est only needs per-component EQUALITY, and unhex is a
-            # bijection on md5 hex — comparing 16-byte binaries instead of
-            # 32-char strings gives the identical match count at half the
-            # bytes compared AND half the band-row payload shuffled.
-            # Unrolled array-of-get form (r7): the transform(...) lambda is
-            # CodegenFallback — interpreted once per band row
-            as_bin = lambda c: F.array(  # noqa: E731
-                *[F.unhex(F.get(F.col(c), j)) for j in range(n_hashes)]
-            ).alias(c)
-            fb = fb.select(id_col, "band", "bucket", as_bin("_fsig"))
-            cb = cb.select("_cid", "band", "bucket", as_bin("_csig"))
+        # est only needs per-component EQUALITY, and unhex is a bijection
+        # on md5 hex — comparing 16-byte binaries instead of 32-char strings
+        # gives the identical match count at half the bytes compared AND
+        # half the band-row payload shuffled. Unrolled array-of-get form
+        # (r7): the transform(...) lambda is CodegenFallback — interpreted
+        # once per band row
+        as_bin = lambda c: F.array(  # noqa: E731
+            *[F.unhex(F.get(F.col(c), j)) for j in range(n_hashes)]
+        ).alias(c)
+        fb = fb.select(id_col, "band", "bucket", as_bin("_fsig"))
+        cb = cb.select("_cid", "band", "bucket", as_bin("_csig"))
         if hot is not None:
             cb = cb.join(F.broadcast(hot), on=["band", "bucket"], how="left_anti")
         paired = fb.join(cb, on=["band", "bucket"])
@@ -1266,7 +1262,6 @@ def incremental_dedup(
     n_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    method: str = "xxhash64",
     bucket_cap: int | None = None,
     commit: bool = True,
     broadcast_fresh: bool | None = None,
@@ -1284,13 +1279,13 @@ def incremental_dedup(
     if broadcast_fresh is None:
         broadcast_fresh = getattr(store, "BROADCAST_FRESH_DEFAULT", True)
     spark = fresh.sparkSession
-    sig_params = {"n_hashes": n_hashes, "bands": bands, "shingle_n": shingle_n, "method": method}
+    sig_params = _sig_params(n_hashes, bands, shingle_n)
     if store.is_empty():
-        sigs = sign_documents(fresh, text_col, id_col, n_hashes, shingle_n, method)
+        sigs = sign_documents(fresh, text_col, id_col, n_hashes, shingle_n)
         if commit:
             store.append(sigs, bands=bands, summary={"op": "bootstrap", "sig_params": sig_params})
         return fresh.select(F.col(id_col), F.lit("keep").alias("verdict"))
-    store.check_params(n_hashes, bands, shingle_n, method)
+    store.check_params(n_hashes, bands, shingle_n)
     decisions, keep_sigs = dedup_against(
         fresh,
         store.read_signatures(spark),
@@ -1301,7 +1296,6 @@ def incremental_dedup(
         n_hashes=n_hashes,
         bands=bands,
         shingle_n=shingle_n,
-        method=method,
         bucket_cap=bucket_cap,
         broadcast_fresh=broadcast_fresh,
         hot_buckets=store.hot_buckets(spark, bucket_cap),
@@ -1322,7 +1316,6 @@ def repair_store(
     id_col: str = "doc_id",
     n_hashes: int = 16,
     bands: int = 4,
-    method: str = "xxhash64",
 ) -> int:
     """Re-sign corpus rows that have no signature in the store (the
     crash-between-commits window, or a store lost to operator error), and
@@ -1347,7 +1340,7 @@ def repair_store(
     if store.is_empty():
         missing = corpus_table.read(spark)
     else:
-        store.check_params(n_hashes, bands, 3, method)
+        store.check_params(n_hashes, bands, 3)
         try:
             n_corpus, n_sigs = corpus_table.row_count(), store.signature_row_count()
         except Exception:  # noqa: BLE001 — footer stats are an optimization only
@@ -1364,11 +1357,8 @@ def repair_store(
     missing = missing.localCheckpoint(eager=False)
     n = missing.count()
     if n:
-        sigs = sign_documents(missing, text_col, id_col, n_hashes=n_hashes, method=method)
-        store.append(sigs, bands=bands, summary={
-            "op": "repair",
-            "sig_params": {"n_hashes": n_hashes, "bands": bands, "shingle_n": 3, "method": method},
-        })
+        sigs = sign_documents(missing, text_col, id_col, n_hashes=n_hashes)
+        store.append(sigs, bands=bands, summary={"op": "repair", "sig_params": _sig_params(n_hashes, bands)})
     elif hasattr(store, "sync_row_watermark") and not store.is_empty():
         # count mismatch but nothing missing: the store's row watermark is
         # stale-low (manifest-write crash window) — heal it here or every
@@ -1399,7 +1389,10 @@ def _repair_bands(spark, store, bands: int, id_col: str = "doc_id", n_sigs: int 
             return 0
     except Exception:  # noqa: BLE001 — footers are an optimization only
         pass  # fall through to the anti-join, the safe path
-    sigs = store.read_signatures(spark)
+    # one scan feeds both the length check and the band derivation: the
+    # length aggregate materializes the lazy checkpoint, band_buckets then
+    # reads the cached blocks instead of scanning the table again
+    sigs = store.read_signatures(spark).localCheckpoint(eager=False)
     derived = band_buckets(
         sigs,
         id_col=id_col,
@@ -1431,7 +1424,6 @@ def ingest_batch(
     max_stopword_ratio: float = 0.9,
     n_hashes: int = 16,
     bands: int = 4,
-    method: str = "xxhash64",
     bucket_cap: int | None = None,
     batch_id: str | None = None,
     text_col: str = "text",
@@ -1456,7 +1448,7 @@ def ingest_batch(
     # otherwise short-circuit past them forever
     repaired = repair_store(
         spark, corpus_table, store, text_col=text_col, id_col=id_col,
-        n_hashes=n_hashes, bands=bands, method=method,
+        n_hashes=n_hashes, bands=bands,
     )
 
     # idempotence guard over ALL snapshot summaries (one batch_id per
@@ -1489,12 +1481,12 @@ def ingest_batch(
         ).localCheckpoint(eager=False)
         counts["after_decontam"] = kept.count()
 
-    sig_params = {"n_hashes": n_hashes, "bands": bands, "shingle_n": 3, "method": method}
+    sig_params = _sig_params(n_hashes, bands)
     if store.is_empty():
         decisions = kept.select(F.col(id_col), F.lit("keep").alias("verdict"))
-        keep_sigs = sign_documents(kept, text_col, id_col, n_hashes=n_hashes, method=method)
+        keep_sigs = sign_documents(kept, text_col, id_col, n_hashes=n_hashes)
     else:
-        store.check_params(**sig_params)
+        store.check_params(n_hashes, bands, 3)
         decisions, keep_sigs = dedup_against(
             kept,
             store.read_signatures(spark),
@@ -1504,7 +1496,6 @@ def ingest_batch(
             threshold=threshold,
             n_hashes=n_hashes,
             bands=bands,
-            method=method,
             bucket_cap=bucket_cap,
             broadcast_fresh=broadcast_fresh,
             hot_buckets=store.hot_buckets(spark, bucket_cap),

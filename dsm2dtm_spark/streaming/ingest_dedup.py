@@ -40,7 +40,7 @@ def streaming_doc_ingest(
 ):
     """Start (and in ``available_now`` mode drain) a streaming incremental
     ingest over a parquet inbox. ``ingest_params`` pass through to
-    ``ingest_batch`` (threshold, method, bucket_cap, ngram, …). Returns the
+    ``ingest_batch`` (threshold, bucket_cap, ngram, …). Returns the
     query handle (already awaited in availableNow mode)."""
     import hashlib
 

@@ -16,7 +16,7 @@ never all-pairs):
     spark-submit --py-files engine.zip jobs/dedup_corpus.py \
         --input /root/testdata/sf0.01/documents.parquet \
         --output /tmp/dedup_out [--threshold 0.7] [--min-tokens 3] \
-        [--bucket-cap 20000] [--cores 32]
+        [--bucket-cap 20000] [--cores 4]
 
 Output table columns = input columns; a JSON line with per-stage counts goes
 to stdout (the driver-side metrics contract). The commit is atomic (snapshot

@@ -17,7 +17,7 @@ Per batch:
     spark-submit --py-files engine.zip jobs/ingest_snapshot.py \
         --input /path/to/fresh.parquet --corpus /path/to/corpus_table \
         --store /path/to/sigstore [--eval-set /path/to/eval.parquet] \
-        [--threshold 0.5] [--ngram 13] [--bucket-cap 20000] [--cores 32] \
+        [--threshold 0.5] [--ngram 13] [--bucket-cap 20000] [--cores 4] \
         [--bucketed-store]
 
 Store layout: the default SignatureStore + broadcast-fresh probes fits the
@@ -74,7 +74,6 @@ def main():
     ap.add_argument("--ngram", type=int, default=13, help="decontamination word n-gram size")
     ap.add_argument("--min-tokens", type=int, default=3)
     ap.add_argument("--max-stopword-ratio", type=float, default=0.9)
-    ap.add_argument("--method", choices=["xxhash64", "md5"], default="xxhash64")
     ap.add_argument("--bucket-cap", type=int, default=None)
     ap.add_argument(
         "--bucketed-store",
@@ -128,7 +127,6 @@ def main():
         ngram=args.ngram,
         min_tokens=args.min_tokens,
         max_stopword_ratio=args.max_stopword_ratio,
-        method=args.method,
         bucket_cap=args.bucket_cap,
         batch_id=batch_id,
     )

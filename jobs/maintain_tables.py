@@ -15,7 +15,7 @@ of it in one sequential pass:
          [--store-n-buckets 64] [--store-max-files-per-bucket 1]] \
         [--ann-store /path/to/annindex]... \
         [--small-file-mb 32] [--target-file-mb 128] \
-        [--expire-keep-last 3] [--cores 32]
+        [--expire-keep-last 3] [--cores 4]
 
 - each `--table` (repeatable): `SnapshotTable.compact` (small files fold
   into ~target-sized ones as ONE atomic snapshot; `--sort-by` range-
@@ -105,7 +105,6 @@ def run_maintenance(
                 store,
                 n_hashes=sp.get("n_hashes", 16),
                 bands=sp.get("bands", 4),
-                method=sp.get("method", "xxhash64"),
             )
         kwargs = (
             {

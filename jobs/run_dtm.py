@@ -4,7 +4,7 @@ re-expressed as a cluster job — SURVEY.md R24).
     zip -qr engine.zip dsm2dtm_spark
     spark-submit --py-files engine.zip jobs/run_dtm.py \
         --input /path/to/images_table --output /path/to/dtm_table \
-        --radius 40 [--slope 0.1] [--tile-px 1024] [--tiled] [--cores 32]
+        --radius 40 [--slope 0.1] [--tile-px 1024] [--tiled] [--cores 4]
 
 Input/output are Iceberg-style snapshot tables (sources.manifest). Rerunning
 after an interruption resumes from the committed snapshot (anti-join) —

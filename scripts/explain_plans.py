@@ -178,9 +178,9 @@ def main():
 
     corpus = docs.filter("doc_id % 2 = 0")
     fresh = docs.filter("doc_id % 2 = 1")
-    sigs = incremental.sign_documents(corpus, method="md5").localCheckpoint(eager=True)
+    sigs = incremental.sign_documents(corpus).localCheckpoint(eager=True)
     decisions, _ = incremental.dedup_against(
-        fresh, sigs, incremental.band_buckets(sigs), method="md5", materialize_fresh=False
+        fresh, sigs, incremental.band_buckets(sigs), materialize_fresh=False
     )  # raw lineage: the checkpoint placeholder would hide the shingle story
     sections.append(
         (
@@ -208,7 +208,7 @@ def main():
     try:
         bstore = BucketedSignatureStore(bs_root, n_buckets=8)
         bstore.append(
-            incremental.sign_documents(corpus.limit(400), method="md5"),
+            incremental.sign_documents(corpus.limit(400)),
             summary={"sig_params": {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": "md5"}},
         )
         old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -218,7 +218,6 @@ def main():
                 fresh,
                 bstore.read_signatures(spark),
                 bstore.read_bands(spark),
-                method="md5",
                 broadcast_fresh=False,
                 materialize_fresh=False,
             )

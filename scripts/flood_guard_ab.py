@@ -70,8 +70,8 @@ def fit_exponent(xs, ys):
 
 
 def main():
-    from dsm2dtm_spark.operators.dedup import minhash_near_dups, minhash_signatures
-    from dsm2dtm_spark.operators.dedup import minhash_lsh_candidates
+    from dsm2dtm_spark.operators.dedup import minhash_lsh_candidates, minhash_near_dups
+    from dsm2dtm_spark.operators.incremental import minhash_signatures_md5
     from dsm2dtm_spark.session import get_spark
 
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -81,7 +81,7 @@ def main():
     for n in SIZES:
         df = spark.createDataFrame(make_corpus(n), ["doc_id", "text"]).repartition(cores)
         df = df.localCheckpoint()  # corpus build off the clock
-        sig = minhash_signatures(df, n_hashes=N_HASHES)
+        sig = minhash_signatures_md5(df, n_hashes=N_HASHES)
 
         t0 = time.time()
         c_nocap = minhash_lsh_candidates(sig, bands=BANDS, rows_per_band=N_HASHES // BANDS).count()

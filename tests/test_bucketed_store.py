@@ -55,16 +55,16 @@ class TestBucketedStore:
         plain = SignatureStore(str(tmp_path / "plain"))
         bucketed = BucketedSignatureStore(str(tmp_path / "bucketed"), n_buckets=4)
         for store, bf in ((plain, True), (bucketed, False)):
-            boot = incremental_dedup(store, _df(spark, CORPUS), method="md5", broadcast_fresh=bf)
+            boot = incremental_dedup(store, _df(spark, CORPUS), broadcast_fresh=bf)
             assert {r.verdict for r in boot.collect()} == {"keep"}
         got_plain = {
             r.doc_id: r.verdict
-            for r in incremental_dedup(plain, _df(spark, FRESH), method="md5").collect()
+            for r in incremental_dedup(plain, _df(spark, FRESH)).collect()
         }
         got_bucketed = {
             r.doc_id: r.verdict
             for r in incremental_dedup(
-                bucketed, _df(spark, FRESH), method="md5", broadcast_fresh=False
+                bucketed, _df(spark, FRESH), broadcast_fresh=False
             ).collect()
         }
         assert got_bucketed == got_plain == {100: "exact", 101: "near", 102: "keep", 103: "keep"}
@@ -77,7 +77,7 @@ class TestBucketedStore:
     def test_stored_side_joins_read_without_exchange(self, spark, tmp_path):
         store = BucketedSignatureStore(str(tmp_path / "planstore"), n_buckets=4)
         store.append(
-            sign_documents(_df(spark, CORPUS), method="md5"),
+            sign_documents(_df(spark, CORPUS)),
             summary={"sig_params": {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": "md5"}},
         )
         fresh_fp = _df(spark, FRESH).select("doc_id", F.md5("text").alias("fingerprint"))
@@ -103,13 +103,12 @@ class TestBucketedStore:
 
     def test_full_dedup_against_bucketed_store_no_store_shuffle(self, spark, tmp_path):
         store = BucketedSignatureStore(str(tmp_path / "fullplan"), n_buckets=4)
-        incremental_dedup(store, _df(spark, CORPUS), method="md5", broadcast_fresh=False)
+        incremental_dedup(store, _df(spark, CORPUS), broadcast_fresh=False)
         with _no_auto_broadcast(spark):
             decisions, _ = dedup_against(
                 _df(spark, FRESH),
                 store.read_signatures(spark),
                 store.read_bands(spark),
-                method="md5",
                 broadcast_fresh=False,
                 materialize_fresh=False,
             )
@@ -129,7 +128,7 @@ class TestBucketedStore:
                 (100 * i + j, f"wholly distinct document {i}-{j} about topic {i * 31 + j}")
                 for j in range(10)
             ]
-            store.append(sign_documents(_df(spark, batch), method="md5"), summary={"sig_params": sp})
+            store.append(sign_documents(_df(spark, batch)), summary={"sig_params": sp})
         import os
 
         def _files(table):
@@ -159,7 +158,7 @@ class TestBucketedStore:
     def test_census_and_cap_guard(self, spark, tmp_path):
         flood = [(i, f"standard legal boilerplate footer text {i % 2}") for i in range(50)]
         store = BucketedSignatureStore(str(tmp_path / "census"), bucket_cap=3, n_buckets=4)
-        incremental_dedup(store, _df(spark, flood), method="md5", bucket_cap=3, broadcast_fresh=False)
+        incremental_dedup(store, _df(spark, flood), bucket_cap=3, broadcast_fresh=False)
         census = {
             (r.band, r.bucket)
             for r in store.read_bands(spark)
@@ -181,7 +180,7 @@ class TestBucketedStore:
         flood = [(i, f"standard legal boilerplate footer text {i % 2}") for i in range(50)]
         root = str(tmp_path / "late_cap_b")
         store0 = BucketedSignatureStore(root, n_buckets=4)
-        incremental_dedup(store0, _df(spark, flood), method="md5", broadcast_fresh=False)
+        incremental_dedup(store0, _df(spark, flood), broadcast_fresh=False)
         assert store0.bucket_stats.current_snapshot() is None
         store = BucketedSignatureStore(root, bucket_cap=3)
         hot = {(r.band, r.bucket) for r in store.hot_buckets(spark, 3).collect()}
@@ -200,7 +199,7 @@ class TestBucketedStore:
         Simulated by dropping the catalog entries (data is external, so the
         files survive the DROP exactly as they survive a session exit)."""
         store = BucketedSignatureStore(str(tmp_path / "xsession"), n_buckets=4)
-        incremental_dedup(store, _df(spark, CORPUS), method="md5", broadcast_fresh=False)
+        incremental_dedup(store, _df(spark, CORPUS), broadcast_fresh=False)
         spark.sql(f"DROP TABLE {store.sig_table}")
         spark.sql(f"DROP TABLE {store.bands_table}")
         reopened = BucketedSignatureStore(str(tmp_path / "xsession"))
@@ -217,7 +216,7 @@ class TestBucketedStore:
         got = {
             r.doc_id: r.verdict
             for r in incremental_dedup(
-                reopened, _df(spark, FRESH), method="md5", broadcast_fresh=False
+                reopened, _df(spark, FRESH), broadcast_fresh=False
             ).collect()
         }
         assert got == {100: "exact", 101: "near", 102: "keep", 103: "keep"}
@@ -231,7 +230,7 @@ class TestBucketedStore:
         sp = {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": "md5"}
         for i in range(2):
             batch = [(10 * i + j, f"distinct doc {i}-{j} topic {i * 7 + j}") for j in range(5)]
-            store.append(sign_documents(_df(spark, batch), method="md5"), summary={"sig_params": sp})
+            store.append(sign_documents(_df(spark, batch)), summary={"sig_params": sp})
         store.compact(spark)
         assert not os.path.exists(store._location("signatures", 0))
         assert os.path.exists(store._location("signatures", 1))
@@ -263,12 +262,12 @@ class TestBucketedStore:
 
         monkeypatch.setattr(inc, "dedup_against", spy)
         plain = SignatureStore(str(tmp_path / "p"))
-        incremental_dedup(plain, _df(spark, CORPUS), method="md5")
-        incremental_dedup(plain, _df(spark, FRESH), method="md5")
+        incremental_dedup(plain, _df(spark, CORPUS))
+        incremental_dedup(plain, _df(spark, FRESH))
         assert captured.pop("bf") is True
         bucketed = BucketedSignatureStore(str(tmp_path / "b"), n_buckets=4)
-        incremental_dedup(bucketed, _df(spark, CORPUS), method="md5")
-        incremental_dedup(bucketed, _df(spark, FRESH), method="md5")
+        incremental_dedup(bucketed, _df(spark, CORPUS))
+        incremental_dedup(bucketed, _df(spark, FRESH))
         assert captured.pop("bf") is False
         # the production wrapper (jobs/ingest_snapshot.py passes nothing)
         ingest_batch(
@@ -276,7 +275,6 @@ class TestBucketedStore:
             _df(spark, [(500, "some new ingest-path doc about canals")]),
             SnapshotTable(str(tmp_path / "c1")),
             plain,
-            method="md5",
             batch_id="x1",
         )
         assert captured.pop("bf") is True
@@ -285,7 +283,6 @@ class TestBucketedStore:
             _df(spark, [(501, "another new ingest-path doc about weirs")]),
             SnapshotTable(str(tmp_path / "c2")),
             bucketed,
-            method="md5",
             batch_id="x2",
         )
         assert captured.pop("bf") is False
@@ -294,7 +291,6 @@ class TestBucketedStore:
                 _df(spark, FRESH),
                 plain.read_signatures(spark),
                 plain.read_bands(spark),
-                method="md5",
                 broadcast_fresh=None,
             )
 
@@ -306,12 +302,12 @@ class TestBucketedStore:
         silently missed every row committed through the stream."""
         store = BucketedSignatureStore(str(tmp_path / "xclone"), n_buckets=4)
         sp = {"sig_params": {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": "md5"}}
-        store.append(sign_documents(_df(spark, CORPUS[:2]), method="md5"), summary=sp)
+        store.append(sign_documents(_df(spark, CORPUS[:2])), summary=sp)
         # cache THIS session's file listing for the table
         assert store.read_signatures(spark).count() == 2
         # append through a clone (what foreachBatch does)
         clone = spark.newSession()
-        store.append(sign_documents(_df(clone, CORPUS[2:]), method="md5"), summary=sp)
+        store.append(sign_documents(_df(clone, CORPUS[2:])), summary=sp)
         # this session must see all 4 rows, and join against them
         assert store.read_signatures(spark).count() == 4
         probe = _df(spark, [(900, CORPUS[2][1])]).select(F.md5("text").alias("fingerprint"))
@@ -332,7 +328,7 @@ class TestBucketedStore:
         store = BucketedSignatureStore(str(tmp_path / "xcompact"), n_buckets=4)
         sp = {"sig_params": {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": "md5"}}
         for half in (CORPUS[:2], CORPUS[2:]):
-            store.append(sign_documents(_df(spark, half), method="md5"), summary=sp)
+            store.append(sign_documents(_df(spark, half)), summary=sp)
         assert store.read_signatures(spark).count() == 4  # register + cache here
         clone_store = BucketedSignatureStore(str(tmp_path / "xcompact"))
         clone_store.compact(spark.newSession())  # v0 dir is now deleted
@@ -340,7 +336,7 @@ class TestBucketedStore:
         got = {
             r.doc_id: r.verdict
             for r in incremental_dedup(
-                store, _df(spark, FRESH), method="md5", broadcast_fresh=False
+                store, _df(spark, FRESH), broadcast_fresh=False
             ).collect()
         }
         assert got == {100: "exact", 101: "near", 102: "keep", 103: "keep"}
@@ -350,14 +346,13 @@ class TestBucketedStore:
         re-bootstrap over the committed state (jobs: the --bucketed-store
         flag is fixed at creation)."""
         plain_root = str(tmp_path / "plainroot")
-        incremental_dedup(SignatureStore(plain_root), _df(spark, CORPUS), method="md5")
+        incremental_dedup(SignatureStore(plain_root), _df(spark, CORPUS))
         with pytest.raises(ValueError, match="plain SignatureStore"):
             BucketedSignatureStore(plain_root)
         bucket_root = str(tmp_path / "bucketroot")
         incremental_dedup(
             BucketedSignatureStore(bucket_root, n_buckets=4),
             _df(spark, CORPUS),
-            method="md5",
             broadcast_fresh=False,
         )
         with pytest.raises(ValueError, match="BucketedSignatureStore"):
@@ -431,7 +426,7 @@ class TestBucketEvolution:
         import os
 
         store = BucketedSignatureStore(str(tmp_path / "hashchk"), n_buckets=4)
-        store.append(sign_documents(self._batch(spark, 0, 30), method="md5"), summary=self.SP)
+        store.append(sign_documents(self._batch(spark, 0, 30)), summary=self.SP)
         for kind, cols in BucketedSignatureStore._BUCKET_COLS.items():
             version = store._meta()["tables"][kind]["version"]
             loc = store._location(kind, version)
@@ -454,15 +449,15 @@ class TestBucketEvolution:
         import os
 
         store = BucketedSignatureStore(str(tmp_path / "inc"), n_buckets=4)
-        store.append(sign_documents(self._batch(spark, 0, 15), method="md5"), summary=self.SP)
-        store.append(sign_documents(self._batch(spark, 15, 30), method="md5"), summary=self.SP)
+        store.append(sign_documents(self._batch(spark, 0, 15)), summary=self.SP)
+        store.append(sign_documents(self._batch(spark, 15, 30)), summary=self.SP)
         assert store.compact(spark)["signatures"] == 1
         v = store._meta()["tables"]["signatures"]["version"]
         # the fold really is ONE file per bucket: the aligning repartition
         # must survive planning (Catalyst elides it over a catalog-table
         # read — the path-read source exists precisely to keep it)
         assert all(len(fs) == 1 for fs in store._files_by_bucket("signatures", v).values())
-        store.append(sign_documents(self._batch(spark, 100, 101), method="md5"), summary=self.SP)
+        store.append(sign_documents(self._batch(spark, 100, 101)), summary=self.SP)
 
         by_bucket = store._files_by_bucket("signatures", v)
         hot = [b for b, fs in by_bucket.items() if len(fs) > 1]
@@ -502,7 +497,7 @@ class TestBucketEvolution:
         maintenance pass must not rewrite (or even re-link) anything —
         the version directories stay untouched."""
         store = BucketedSignatureStore(str(tmp_path / "noop"), n_buckets=4)
-        store.append(sign_documents(self._batch(spark, 0, 20), method="md5"), summary=self.SP)
+        store.append(sign_documents(self._batch(spark, 0, 20)), summary=self.SP)
         store.compact(spark)
         v = store._meta()["tables"]["signatures"]["version"]
         res = store.compact(spark)
@@ -516,7 +511,7 @@ class TestBucketEvolution:
         with 16 — the constructor's stale default loses to the manifest."""
         root = str(tmp_path / "evolve")
         store = BucketedSignatureStore(root, n_buckets=4)
-        incremental_dedup(store, _df(spark, CORPUS), method="md5", broadcast_fresh=False)
+        incremental_dedup(store, _df(spark, CORPUS), broadcast_fresh=False)
 
         res = store.compact(spark, n_buckets=16)
         assert res["signatures_buckets_rewritten"] >= 1
@@ -534,7 +529,7 @@ class TestBucketEvolution:
         got = {
             r.doc_id: r.verdict
             for r in incremental_dedup(
-                store, _df(spark, FRESH), method="md5", broadcast_fresh=False
+                store, _df(spark, FRESH), broadcast_fresh=False
             ).collect()
         }
         assert got == {100: "exact", 101: "near", 102: "keep", 103: "keep"}
@@ -559,7 +554,7 @@ class TestBucketEvolution:
         registering with the stale count would mis-bucket every row."""
         root = str(tmp_path / "stale")
         store = BucketedSignatureStore(root, n_buckets=4)
-        incremental_dedup(store, _df(spark, CORPUS), method="md5", broadcast_fresh=False)
+        incremental_dedup(store, _df(spark, CORPUS), broadcast_fresh=False)
         other = BucketedSignatureStore(root)
         other.compact(spark.newSession(), n_buckets=8)
         assert store.read_signatures(spark).count() == 4  # re-registered at v1/8

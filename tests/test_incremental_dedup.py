@@ -5,6 +5,8 @@ pipeline (VERDICT r3 #1)."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -41,15 +43,14 @@ def _df(spark, rows):
     return spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
 
 
-@pytest.mark.parametrize("method", ["xxhash64", "md5"])
 class TestIncrementalDedup:
-    def test_verdicts_and_store_growth(self, spark, tmp_path, method):
-        store = SignatureStore(str(tmp_path / f"store_{method}"))
-        boot = incremental_dedup(store, _df(spark, CORPUS), method=method)
+    def test_verdicts_and_store_growth(self, spark, tmp_path):
+        store = SignatureStore(str(tmp_path / "store"))
+        boot = incremental_dedup(store, _df(spark, CORPUS))
         assert {r.verdict for r in boot.collect()} == {"keep"}
         assert store.read_signatures(spark).count() == 4
 
-        d1 = {r.doc_id: r.verdict for r in incremental_dedup(store, _df(spark, FRESH_1), method=method).collect()}
+        d1 = {r.doc_id: r.verdict for r in incremental_dedup(store, _df(spark, FRESH_1)).collect()}
         assert d1[100] == "exact"
         assert d1[101] == "near"
         assert d1[102] == "keep" and d1[103] == "keep"
@@ -57,52 +58,46 @@ class TestIncrementalDedup:
         assert store.read_signatures(spark).count() == 6
 
         # batch 2 dedups against corpus + batch 1 (the store grew)
-        d2 = {r.doc_id: r.verdict for r in incremental_dedup(store, _df(spark, FRESH_2), method=method).collect()}
+        d2 = {r.doc_id: r.verdict for r in incremental_dedup(store, _df(spark, FRESH_2)).collect()}
         assert d2 == {200: "exact", 201: "keep"}
         assert store.read_signatures(spark).count() == 7
         assert store.read_bands(spark).count() == 7 * 4
 
-    def test_corpus_never_reshingled(self, spark, tmp_path, method):
+    def test_corpus_never_reshingled(self, spark, tmp_path):
         """The committed side must enter the plan as parquet scans of the
-        signature/band tables only — shingling (sequence/substring explode)
-        may appear for the FRESH side exclusively."""
-        store = SignatureStore(str(tmp_path / f"plan_{method}"))
-        incremental_dedup(store, _df(spark, CORPUS), method=method)
+        signature/band tables only — shingling (the signing UDF) may appear
+        for the FRESH side exclusively."""
+        store = SignatureStore(str(tmp_path / "plan"))
+        incremental_dedup(store, _df(spark, CORPUS))
         decisions, keep_sigs = dedup_against(
             _df(spark, FRESH_1),
             store.read_signatures(spark),
             store.read_bands(spark),
-            method=method,
             materialize_fresh=False,  # keep the raw lineage plan-inspectable
         )
         plan = decisions._jdf.queryExecution().optimizedPlan().toString()
         # every signing marker in the plan hangs off the fresh in-memory
-        # relation, never off a FileScan of the store. The xxhash64 flavor
-        # shingles with the JVM expression ("sequence(1, greatest("); the
-        # md5 flavor (r7) shingles inside the Arrow sig UDF over the
-        # JVM-lowered text ("sig(lower(") — count whichever markers apply
-        # and the store scans independently
-        markers = ("sequence(1, greatest(", "sig(lower(")
-        n_sign = sum(plan.count(m) for m in markers)
-        assert n_sign >= 1  # fresh side is signed (sign + verify feed)
+        # relation, never off a FileScan of the store: the signer (r7)
+        # shingles inside the Arrow sig UDF over the JVM-lowered text
+        marker = "sig(lower("
+        assert plan.count(marker) >= 1  # fresh side is signed (sign + verify feed)
         lines = plan.splitlines()
         scan_lines = [ln for ln in lines if "parquet" in ln]
         assert scan_lines  # store scanned
         # the store's parquet scans carry no signing expression and never
         # read a text column — the corpus is verifiably never re-processed
         for ln in scan_lines:
-            for m in markers:
-                assert m not in ln
+            assert marker not in ln
             assert "text#" not in ln
 
-    def test_store_side_never_shuffles(self, spark, tmp_path, method):
+    def test_store_side_never_shuffles(self, spark, tmp_path):
         """VERDICT r4 #3: with ``broadcast_fresh`` (default) every join in
         the decisions plan must build on a batch-bounded side — no
         SortMergeJoin / ShuffledHashJoin anywhere, so the 10^12-row stored
         fingerprint/band/signature scans only ever STREAM. The exact-pass
         probe subtree itself must carry zero shuffle Exchange."""
-        store = SignatureStore(str(tmp_path / f"bf_{method}"))
-        incremental_dedup(store, _df(spark, CORPUS), method=method)
+        store = SignatureStore(str(tmp_path / "bf"))
+        incremental_dedup(store, _df(spark, CORPUS))
 
         fresh_fp = _df(spark, FRESH_1).withColumn("fingerprint", F.md5("text"))
         probe = _matched_fingerprints(store.read_signatures(spark), fresh_fp)
@@ -114,7 +109,6 @@ class TestIncrementalDedup:
             _df(spark, FRESH_1),
             store.read_signatures(spark),
             store.read_bands(spark),
-            method=method,
             materialize_fresh=False,  # keep the full lineage plan-inspectable
         )
         plan = decisions._jdf.queryExecution().executedPlan().toString()
@@ -122,35 +116,32 @@ class TestIncrementalDedup:
         assert "ShuffledHashJoin" not in plan
         assert plan.count("BroadcastHashJoin") >= 4  # probe, semi, anti, bands, verify
 
-    def test_broadcast_and_shuffle_paths_agree(self, spark, tmp_path, method):
+    def test_broadcast_and_shuffle_paths_agree(self, spark, tmp_path):
         """``broadcast_fresh=False`` (the too-big-to-broadcast batch path,
         for bucketed stores) must produce identical verdicts."""
-        store = SignatureStore(str(tmp_path / f"agree_{method}"))
-        incremental_dedup(store, _df(spark, CORPUS), method=method)
-        kw = dict(method=method)
+        store = SignatureStore(str(tmp_path / "agree"))
+        incremental_dedup(store, _df(spark, CORPUS))
         a = dedup_against(
-            _df(spark, FRESH_1), store.read_signatures(spark), store.read_bands(spark), **kw
+            _df(spark, FRESH_1), store.read_signatures(spark), store.read_bands(spark)
         )[0]
         b = dedup_against(
             _df(spark, FRESH_1),
             store.read_signatures(spark),
             store.read_bands(spark),
             broadcast_fresh=False,
-            **kw,
         )[0]
         assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
-    def test_deterministic_across_partitioning(self, spark, tmp_path, method):
-        store = SignatureStore(str(tmp_path / f"det_{method}"))
-        incremental_dedup(store, _df(spark, CORPUS), method=method)
+    def test_deterministic_across_partitioning(self, spark, tmp_path):
+        store = SignatureStore(str(tmp_path / "det"))
+        incremental_dedup(store, _df(spark, CORPUS))
         a = dedup_against(
-            _df(spark, FRESH_1), store.read_signatures(spark), store.read_bands(spark), method=method
+            _df(spark, FRESH_1), store.read_signatures(spark), store.read_bands(spark)
         )[0]
         b = dedup_against(
             _df(spark, FRESH_1).repartition(7),
             store.read_signatures(spark).repartition(5),
             store.read_bands(spark),
-            method=method,
         )[0]
         assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
@@ -158,14 +149,45 @@ class TestIncrementalDedup:
 class TestStoreParamGuard:
     def test_mismatched_params_fail_fast(self, spark, tmp_path):
         store = SignatureStore(str(tmp_path / "guard"))
-        incremental_dedup(store, _df(spark, CORPUS), method="md5", n_hashes=16)
+        incremental_dedup(store, _df(spark, CORPUS), n_hashes=16)
         with pytest.raises(ValueError, match="incomparable"):
-            incremental_dedup(store, _df(spark, FRESH_1), method="md5", n_hashes=32)
+            incremental_dedup(store, _df(spark, FRESH_1), n_hashes=32)
         with pytest.raises(ValueError, match="incomparable"):
-            incremental_dedup(store, _df(spark, FRESH_1), method="xxhash64", n_hashes=16)
+            incremental_dedup(store, _df(spark, FRESH_1), bands=8)
         # matching params still work
-        out = incremental_dedup(store, _df(spark, FRESH_1), method="md5", n_hashes=16)
+        out = incremental_dedup(store, _df(spark, FRESH_1), n_hashes=16)
         assert out.count() == 4
+
+    def test_store_signed_with_removed_flavor_fails_fast(self, spark, tmp_path):
+        """A store an older build signed with its xxhash64 flavor (bigint
+        signature arrays, ``sig_params.method == 'xxhash64'``) must be
+        refused by every store-backed entry point called with default
+        arguments — never silently mixed with md5 signatures — and must be
+        left exactly as committed."""
+        from dsm2dtm_spark.operators.incremental import ingest_batch, repair_store
+        from dsm2dtm_spark.sources.manifest import SnapshotTable
+
+        corpus = SnapshotTable(str(tmp_path / "corpus"))
+        corpus.write_pandas(pd.DataFrame(CORPUS, columns=["doc_id", "text"]))
+        store = SignatureStore(str(tmp_path / "old_store"))
+        old_sigs = _df(spark, CORPUS).select(
+            "doc_id",
+            F.md5("text").alias("fingerprint"),
+            F.array(*[F.xxhash64(F.lit(i), "text") for i in range(16)]).alias("signature"),
+        )
+        old_params = {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": "xxhash64"}
+        store.append(old_sigs, summary={"op": "bootstrap", "sig_params": old_params})
+        tables = (corpus, store.signatures, store.bands)
+        before = [t.current_snapshot().snapshot_id for t in tables]
+
+        fresh = _df(spark, FRESH_1)
+        with pytest.raises(ValueError, match="rebuild the store"):
+            ingest_batch(spark, fresh, corpus, store, batch_id="after-upgrade")
+        with pytest.raises(ValueError, match="rebuild the store"):
+            incremental_dedup(store, fresh)
+        with pytest.raises(ValueError, match="rebuild the store"):
+            repair_store(spark, corpus, store)
+        assert [t.current_snapshot().snapshot_id for t in tables] == before
 
 
 class TestStoreCensusAndRepair:
@@ -176,7 +198,7 @@ class TestStoreCensusAndRepair:
 
     def test_persisted_hot_list_matches_census(self, spark, tmp_path):
         store = SignatureStore(str(tmp_path / "census"), bucket_cap=3)
-        incremental_dedup(store, _df(spark, self.FLOOD), method="md5", bucket_cap=3)
+        incremental_dedup(store, _df(spark, self.FLOOD), bucket_cap=3)
         census = {
             (r.band, r.bucket)
             for r in store.read_bands(spark)
@@ -194,7 +216,7 @@ class TestStoreCensusAndRepair:
         # the capped dedup THROUGH the persisted list behaves like the
         # on-the-fly census: boilerplate fresh doc is NOT flagged near
         fresh = _df(spark, [(999, "standard legal boilerplate footer text 0 extra")])
-        out = incremental_dedup(store, fresh, method="md5", bucket_cap=3, commit=False)
+        out = incremental_dedup(store, fresh, bucket_cap=3, commit=False)
         assert [r.verdict for r in out.collect()] == ["keep"]
 
     def test_hot_overflow_is_sticky_across_appends(self, spark, tmp_path, monkeypatch):
@@ -207,12 +229,12 @@ class TestStoreCensusAndRepair:
         # 3 copies of one text -> its 4 band buckets all cross cap=1 ->
         # 4 hot pairs > MAX_HOT_LIST=2 -> overflow commit
         flood = [(i, "identical flood text shared by all copies") for i in range(3)]
-        incremental_dedup(store, _df(spark, flood), method="md5", bucket_cap=1)
+        incremental_dedup(store, _df(spark, flood), bucket_cap=1)
         snap1 = store.bucket_stats.current_snapshot()
         assert snap1.summary.get("hot_overflow") is True and "hot" not in snap1.summary
         # next batch: unique docs, nothing newly hot — the flag must persist
         quiet = [(100 + i, f"wholly unique document number {i} about topic {i}") for i in range(3)]
-        incremental_dedup(store, _df(spark, quiet), method="md5", bucket_cap=1)
+        incremental_dedup(store, _df(spark, quiet), bucket_cap=1)
         snap2 = store.bucket_stats.current_snapshot()
         assert snap2.summary.get("hot_overflow") is True and "hot" not in snap2.summary
         # reader falls back to the census and still sees all 4 flood buckets
@@ -233,7 +255,7 @@ class TestStoreCensusAndRepair:
         root = str(tmp_path / "late_cap")
         # phase 1: capless store accumulates a flood (no census maintained)
         store0 = SignatureStore(root)
-        incremental_dedup(store0, _df(spark, self.FLOOD), method="md5")
+        incremental_dedup(store0, _df(spark, self.FLOOD))
         assert store0.bucket_stats.current_snapshot() is None
         # phase 2: reopen WITH the cap — the persisted list must now cover
         # the HISTORICAL flood buckets, exactly matching the on-the-fly census
@@ -249,7 +271,7 @@ class TestStoreCensusAndRepair:
         # phase 3: a later append must not double-count — cumulative census
         # totals stay equal to a fresh groupBy over the actual band table
         quiet = [(1000 + i, f"wholly unique follow-up document {i} topic {i}") for i in range(3)]
-        incremental_dedup(store, _df(spark, quiet), method="md5", bucket_cap=3)
+        incremental_dedup(store, _df(spark, quiet), bucket_cap=3)
         totals = {
             (r.band, r.bucket): r.n
             for r in store.bucket_stats.read(spark)
@@ -284,7 +306,7 @@ class TestStoreCensusAndRepair:
         # 4 docs x 4 bands: every occupied (band, bucket) pair crosses
         # cap=0 — far more than MAX_HOT_LIST=2
         docs = [(i, f"wholly distinct document number {i} about subject {i}") for i in range(4)]
-        store.append(sign_documents(_df(spark, docs), method="md5"))
+        store.append(sign_documents(_df(spark, docs)))
         assert sizes and max(sizes) <= SignatureStore.MAX_HOT_LIST + 1
         snap = store.bucket_stats.current_snapshot()
         assert snap.summary.get("hot_overflow") is True and "hot" not in snap.summary
@@ -307,29 +329,29 @@ class TestStoreCensusAndRepair:
         docs = _df(spark, [(i, f"document {i} on levees and culverts number {i}") for i in range(4)])
         corpus.write_pandas(docs.toPandas())
         # simulate the crash: signatures land, bands never do
-        sigs = sign_documents(docs, method="md5")
+        sigs = sign_documents(docs)
         store.signatures.write_dataframe(
             sigs,
             summary={"sig_params": {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": "md5"}},
         )
         assert store.band_row_count() is None
-        assert repair_store(spark, corpus, store, method="md5") == 4
+        assert repair_store(spark, corpus, store) == 4
         assert store.band_row_count() == 4 * 4
         # the healed bands equal a from-scratch derivation — and a near-dup
         # of a crashed-batch doc is now caught through the LSH path
         want = {
             (r.doc_id, r.band, r.bucket)
-            for r in band_buckets(sign_documents(docs, method="md5")).collect()
+            for r in band_buckets(sign_documents(docs)).collect()
         }
         got = {(r.doc_id, r.band, r.bucket) for r in store.read_bands(spark).collect()}
         assert got == want
         near = _df(spark, [(99, "document 2 on levees and culverts number 3")])
-        out = incremental_dedup(store, near, method="md5", commit=False)
+        out = incremental_dedup(store, near, commit=False)
         assert [r.verdict for r in out.collect()] == ["near"]
         # and the happy path is quiet again: zero Spark jobs
         sc = spark.sparkContext
         sc.setJobGroup("repair-bands-happy", "happy path")
-        assert repair_store(spark, corpus, store, method="md5") == 0
+        assert repair_store(spark, corpus, store) == 0
         ids = sc.statusTracker().getJobIdsForGroup("repair-bands-happy")
         sc.setJobGroup(None, None)
         assert list(ids) == []
@@ -346,7 +368,7 @@ class TestStoreCensusAndRepair:
         store = SignatureStore(str(tmp_path / "store"))
         docs = _df(spark, [(i, f"document {i} on weirs and gates number {i}") for i in range(3)])
         corpus.write_pandas(docs.toPandas())
-        sigs = sign_documents(docs, method="md5")
+        sigs = sign_documents(docs)
         sp = {"sig_params": {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": "md5"}}
         store.signatures.write_dataframe(sigs, summary=sp)
         # torn append: doc 0 keeps only bands 0-1, doc 1 all 4, doc 2 none
@@ -354,12 +376,78 @@ class TestStoreCensusAndRepair:
         torn = full.filter("(doc_id = 0 AND band < 2) OR doc_id = 1")
         store.bands.write_dataframe(torn)
         assert store.band_row_count() == 6
-        assert repair_store(spark, corpus, store, method="md5") == 2  # docs 0 and 2 healed
+        assert repair_store(spark, corpus, store) == 2  # docs 0 and 2 healed
         got = [
             (r.doc_id, r.band, r.bucket) for r in store.read_bands(spark).collect()
         ]
         want = [(r.doc_id, r.band, r.bucket) for r in full.collect()]
         assert sorted(got) == sorted(want)  # complete AND duplicate-free
+
+    def test_repair_bands_scans_signatures_once(self, spark, tmp_path):
+        """The bands heal reads the stored signatures for two things — the
+        declared-length check and the band derivation — and must scan the
+        signatures table once for both, not once each. Counted off the
+        executed plans of every action the repair runs: the rows the
+        signatures-table scan nodes produced, summed."""
+        from urllib.parse import urlparse
+
+        from pyspark.java_gateway import ensure_callback_server_started
+
+        from dsm2dtm_spark.operators.incremental import repair_store
+        from dsm2dtm_spark.sources.manifest import SnapshotTable
+
+        corpus = SnapshotTable(str(tmp_path / "corpus"))
+        store = SignatureStore(str(tmp_path / "store"))
+        docs = _df(spark, [(i, f"document {i} on spillways and dykes number {i}") for i in range(5)])
+        corpus.write_pandas(docs.toPandas())
+        sp = {"sig_params": {"n_hashes": 16, "bands": 4, "shingle_n": 3, "method": "md5"}}
+        store.signatures.write_dataframe(sign_documents(docs), summary=sp)  # bands commit lost
+
+        class Plans:
+            def __init__(self):
+                self.qes = []
+
+            def onSuccess(self, func_name, qe, duration_ns):  # noqa: N802 — JVM interface
+                self.qes.append(qe)
+
+            def onFailure(self, func_name, qe, exc):  # noqa: N802 — JVM interface
+                self.qes.append(qe)
+
+            class Java:
+                implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+        # a throwaway session scopes the listener to the repair's queries
+        ensure_callback_server_started(spark.sparkContext._gateway)
+        session = spark.newSession()
+        listeners = session._jsparkSession.listenerManager()
+        plans = Plans()
+        listeners.register(plans)
+        try:
+            assert repair_store(session, corpus, store) == 5
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        finally:
+            listeners.clear()  # py4j hands unregister a fresh proxy, so clear
+
+        sig_data = os.path.join(store.signatures.root, "data") + os.sep
+        scanned = 0
+        todo = [qe.executedPlan() for qe in plans.qes]
+        while todo:
+            node = todo.pop()
+            cls = node.getClass().getSimpleName()
+            if cls == "AdaptiveSparkPlanExec":
+                todo.append(node.executedPlan())
+                continue
+            if cls.endswith("QueryStageExec"):
+                todo.append(node.plan())
+                continue
+            if cls == "FileSourceScanExec" and any(
+                urlparse(f).path.startswith(sig_data) for f in node.relation().location().inputFiles()
+            ):
+                scanned += node.metrics().apply("numOutputRows").value()
+            children = node.children()
+            todo.extend(children.apply(i) for i in range(children.size()))
+        assert scanned == 5  # one pass over the 5 stored signatures
+        assert store.band_row_count() == 5 * 4
 
     def test_cross_class_open_does_not_brick_an_empty_root(self, spark, tmp_path):
         """Opening an empty root with the plain class scaffolds empty dirs;
@@ -370,7 +458,7 @@ class TestStoreCensusAndRepair:
         root = str(tmp_path / "fresh")
         SignatureStore(root)  # scaffolds signatures/meta etc., commits nothing
         store = BucketedSignatureStore(root, n_buckets=4)  # must not raise
-        incremental_dedup(store, _df(spark, [(1, "first doc about sluices")]), method="md5")
+        incremental_dedup(store, _df(spark, [(1, "first doc about sluices")]))
         with pytest.raises(ValueError, match="BucketedSignatureStore"):
             SignatureStore(root)  # now it HAS committed bucketed state
 
@@ -380,10 +468,10 @@ class TestStoreCensusAndRepair:
         # commits, and compact()'s rollup must not lose that
         store = SignatureStore(str(tmp_path / "accum"), bucket_cap=5)
         text = "common boilerplate prefix shared by every flood document"
-        sigs1 = sign_documents(_df(spark, [(i, text) for i in range(3)]), method="md5")
+        sigs1 = sign_documents(_df(spark, [(i, text) for i in range(3)]))
         store.append(sigs1, summary={"op": "t"})
         assert store.hot_buckets(spark, 5).count() == 0
-        sigs2 = sign_documents(_df(spark, [(10 + i, text) for i in range(3)]), method="md5")
+        sigs2 = sign_documents(_df(spark, [(10 + i, text) for i in range(3)]))
         store.append(sigs2, summary={"op": "t"})
         assert store.hot_buckets(spark, 5).count() == 4  # all 4 bands hot at n=6
         store.compact(spark)
@@ -393,7 +481,7 @@ class TestStoreCensusAndRepair:
 
     def test_cap_mismatch_on_reopen_fails_fast(self, spark, tmp_path):
         store = SignatureStore(str(tmp_path / "capguard"), bucket_cap=3)
-        incremental_dedup(store, _df(spark, self.FLOOD), method="md5", bucket_cap=3)
+        incremental_dedup(store, _df(spark, self.FLOOD), bucket_cap=3)
         reopened = SignatureStore(str(tmp_path / "capguard"))  # cap restored
         assert reopened.bucket_cap == 3
         with pytest.raises(ValueError, match="hot-bucket census"):
@@ -401,9 +489,9 @@ class TestStoreCensusAndRepair:
 
     def test_hot_list_skips_band_census_in_plan(self, spark, tmp_path):
         store = SignatureStore(str(tmp_path / "planhot"), bucket_cap=3)
-        incremental_dedup(store, _df(spark, self.FLOOD), method="md5", bucket_cap=3)
+        incremental_dedup(store, _df(spark, self.FLOOD), bucket_cap=3)
         fresh = _df(spark, [(999, "standard legal boilerplate footer text 0 extra")])
-        kw = dict(method="md5", materialize_fresh=False)
+        kw = dict(materialize_fresh=False)
         with_census = dedup_against(
             fresh, store.read_signatures(spark), store.read_bands(spark), bucket_cap=3, **kw
         )[0]
@@ -460,7 +548,7 @@ class TestMd5SignatureProperties:
         assert len(sigs[0]) == 16 and all(len(c) == 32 for c in sigs[0])
 
     def test_band_buckets_shape_and_agreement(self, spark):
-        sigs = sign_documents(_df(spark, [(0, CORPUS[0][1]), (1, CORPUS[0][1]), (2, CORPUS[1][1])]), method="md5")
+        sigs = sign_documents(_df(spark, [(0, CORPUS[0][1]), (1, CORPUS[0][1]), (2, CORPUS[1][1])]))
         bb = band_buckets(sigs).collect()
         assert len(bb) == 3 * 4
         by_doc = {}
@@ -476,13 +564,13 @@ class TestMd5SignatureProperties:
         # the cap it is
         flood = [(i, f"standard legal boilerplate footer text {i % 2}") for i in range(50)]
         store = SignatureStore(str(tmp_path / "flood"))
-        incremental_dedup(store, _df(spark, flood), method="md5")
+        incremental_dedup(store, _df(spark, flood))
         fresh = _df(spark, [(999, "standard legal boilerplate footer text 0 extra")])
         uncapped, _ = dedup_against(
-            fresh, store.read_signatures(spark), store.read_bands(spark), method="md5"
+            fresh, store.read_signatures(spark), store.read_bands(spark)
         )
         capped, _ = dedup_against(
-            fresh, store.read_signatures(spark), store.read_bands(spark), method="md5", bucket_cap=3
+            fresh, store.read_signatures(spark), store.read_bands(spark), bucket_cap=3
         )
         assert [r.verdict for r in uncapped.collect()] == ["near"]
         assert [r.verdict for r in capped.collect()] == ["keep"]
@@ -491,7 +579,7 @@ class TestMd5SignatureProperties:
 class TestBandBucketsUnrolled:
     """r7: band_buckets(n_hashes=...) unrolls the bucket expression to
     codegen concat_ws/get — the bucket VALUES must equal the generic
-    transform/array_join form for both signature flavors."""
+    transform/array_join form for string and bigint component arrays."""
 
     def test_md5_flavor_equal(self, spark):
         import pandas as pd
@@ -535,7 +623,7 @@ class TestBandBucketsUnrolled:
         # a declared length exceeding the actual arrays would bucket
         # NULL-skipped md5('') floods. The append must confirm the declared
         # length against the data and fall back to the generic expression.
-        sigs = sign_documents(_df(spark, CORPUS), method="md5")  # arrays of 16
+        sigs = sign_documents(_df(spark, CORPUS))  # arrays of 16
         store = SignatureStore(str(tmp_path / "wrongnh"))
         store.append(
             sigs,
@@ -551,7 +639,7 @@ class TestBandBucketsUnrolled:
         # r7: appends with recorded sig_params take the unrolled codegen
         # bucket form; appends without fall back to the generic expression.
         # The committed band ROWS must be identical either way.
-        sigs = sign_documents(_df(spark, CORPUS), method="md5")
+        sigs = sign_documents(_df(spark, CORPUS))
         with_params = SignatureStore(str(tmp_path / "wp"))
         with_params.append(
             sigs,

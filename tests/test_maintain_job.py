@@ -39,7 +39,7 @@ class TestMaintainJob:
             t.write_pandas(pd.DataFrame({"doc_id": [10 * i + j for j in range(3)], "v": [1] * 3}))
         store = SignatureStore(str(tmp_path / "store"))
         for i in range(3):
-            incremental_dedup(store, _docs(spark, 100 * i, 100 * i + 20), method="md5")
+            incremental_dedup(store, _docs(spark, 100 * i, 100 * i + 20))
         rows_before = t.read(spark).count()
         sig_before = store.read_signatures(spark).count()
 
@@ -65,7 +65,7 @@ class TestMaintainJob:
         store = BucketedSignatureStore(root, n_buckets=4)
         for i in range(3):
             incremental_dedup(
-                store, _docs(spark, 100 * i, 100 * i + 15), method="md5", broadcast_fresh=False
+                store, _docs(spark, 100 * i, 100 * i + 15), broadcast_fresh=False
             )
         before = store.read_signatures(spark).count()
         v0 = store._location("signatures", 0)
@@ -101,7 +101,7 @@ class TestMaintainJob:
         corpus = SnapshotTable(str(tmp_path / "corpus"))
         store = SignatureStore(str(tmp_path / "store"))
         batch = _docs(spark, 0, 8)
-        _ib(spark, batch, corpus, store, method="md5", batch_id="m1")
+        _ib(spark, batch, corpus, store, batch_id="m1")
         shutil.rmtree(str(tmp_path / "store" / "bands"))  # lost in a bad restore
         report = run_maintenance(
             spark,
@@ -118,7 +118,7 @@ class TestMaintainJob:
                 columns=["doc_id", "text"],
             )
         )
-        out = incremental_dedup(store, fresh, method="md5", threshold=0.5, commit=False)
+        out = incremental_dedup(store, fresh, threshold=0.5, commit=False)
         assert [r.verdict for r in out.collect()] == ["near"]
 
     def test_ann_store_compacts_and_expires(self, spark, tmp_path):

@@ -11,6 +11,7 @@ from dsm2dtm_spark.functions import text as T
 from dsm2dtm_spark.operators import dedup as D
 from dsm2dtm_spark.operators import multimodal as M
 from dsm2dtm_spark.operators import simsearch as S
+from dsm2dtm_spark.operators.incremental import minhash_signatures_md5
 
 DOCS = [
     (1, "the cat sat on the mat and it was good", "en"),
@@ -71,12 +72,12 @@ class TestMinhashLSH:
         rows = [(i, "spark engines convert surface models into terrain models") for i in range(flood_n)]
         rows += [(flood_n, "a totally unrelated sentence about cats"), (flood_n + 1, "der hund ist gut")]
         d = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-        sig = D.minhash_signatures(d, n_hashes=16)
+        sig = minhash_signatures_md5(d, n_hashes=16)
         cand = D.minhash_lsh_candidates(sig, bands=4, rows_per_band=4)
         assert cand.count() == flood_n * (flood_n - 1) // 2  # exactly the true dup pairs
 
     def test_bucket_cap_bounds_nearflood_and_keeps_recall_elsewhere(self, spark, docs_df):
-        sig = D.minhash_signatures(docs_df, n_hashes=32)
+        sig = minhash_signatures_md5(docs_df, n_hashes=32)
         capped = D.minhash_lsh_candidates(sig, bands=8, rows_per_band=4, bucket_cap=3)
         uncapped = {(r.left_id, r.right_id) for r in D.minhash_lsh_candidates(sig, bands=8, rows_per_band=4).collect()}
         got = {(r.left_id, r.right_id) for r in capped.collect()}
@@ -84,8 +85,8 @@ class TestMinhashLSH:
         assert (1, 2) in got  # exact dups survive (collapse path, not buckets)
 
     def test_signature_shape_and_determinism(self, spark, docs_df):
-        s1 = {r.doc_id: r.signature for r in D.minhash_signatures(docs_df, n_hashes=16).collect()}
-        s2 = {r.doc_id: r.signature for r in D.minhash_signatures(docs_df, n_hashes=16).collect()}
+        s1 = {r.doc_id: r.signature for r in minhash_signatures_md5(docs_df, n_hashes=16).collect()}
+        s2 = {r.doc_id: r.signature for r in minhash_signatures_md5(docs_df, n_hashes=16).collect()}
         assert s1 == s2
         assert all(len(v) == 16 for v in s1.values())
         assert s1[1] == s1[2]  # identical docs → identical signatures
