@@ -126,6 +126,31 @@ class TestPermissiveMode:
         good = [r for r in rows if r.error is None]
         assert all(r.bytes is not None for r in good)
 
+    def test_quarantine_row_contract(self, spark, image_pdf):
+        # one partition, no repartition: the poison row and 5 good rows share
+        # one Arrow batch, so a null in the poison row sits next to good
+        # rows' 64-bit phash values in the same output frame
+        pdf = image_pdf.iloc[:6].drop(columns=["scenario"]).reset_index(drop=True)
+        poison = pdf.image_id[2]
+        pdf.loc[2, "bytes"] = b"corrupt payload"
+        sdf = spark.createDataFrame(pdf).coalesce(1)
+        rows = dtm_transform(sdf, radius_m=RADIUS, permissive=True, min_parallelism=1).collect()
+        by_id = {r.image_id: r for r in rows}
+        assert len(by_id) == 6
+        bad, src = by_id[poison], pdf.iloc[2]
+        assert (bad.w, bad.h, bad.fmt, bad.caption) == (src.w, src.h, src.fmt, src.caption)
+        assert (bad.bytes, bad.phash, bad.valid_in, bad.valid_out) == (None, None, None, None)
+        assert bad.wall_ms >= 0 and bad.partition_id == 0 and bad.error
+        # good rows are bit-identical to a strict run over the good rows alone
+        strict = dtm_transform(spark.createDataFrame(pdf.drop(index=2)), radius_m=RADIUS).collect()
+        assert {r.image_id for r in strict} == set(by_id) - {poison}
+        for s in strict:
+            r = by_id[s.image_id]
+            assert r.error is None and r.partition_id == 0 and r.wall_ms >= 0
+            assert (bytes(r.bytes), r.phash, r.valid_in, r.valid_out) == (
+                bytes(s.bytes), s.phash, s.valid_in, s.valid_out
+            ), s.image_id
+
 
 class TestResumeModeGuard:
     """Resuming an output table with the OTHER --tiled setting must fail

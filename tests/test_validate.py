@@ -52,3 +52,28 @@ def test_validation_catches_corruption(spark, tables):
     v = validate_against(corrupted, reference).collect()
     failing = {r.image_id for r in v if not r.passes}
     assert pdf.image_id.iloc[0] in failing
+
+
+def test_dims_mismatch_fails_without_raising(spark, tables):
+    """Each side decodes with its own dims: a raw_f32 result cut by its last
+    scanline must not validate against the reference prefix, and a result
+    larger than its reference must fail its row, not the job."""
+    _, reference, _ = tables
+    r0, r1 = reference.orderBy("image_id").limit(2).collect()
+    g0 = codecs.decode(bytes(r0.bytes), r0.h, r0.w, r0.fmt)
+    g1 = codecs.decode(bytes(r1.bytes), r1.h, r1.w, r1.fmt)
+    bad = pd.DataFrame(
+        [
+            {"image_id": r0.image_id, "bytes": codecs.encode_raw_f32(g0[:-1]), "w": r0.w, "h": r0.h - 1,
+             "fmt": "raw_f32", "caption": r0.caption},
+            {"image_id": r1.image_id, "bytes": codecs.encode_raw_f32(np.vstack([g1, g1[-1:]])), "w": r1.w,
+             "h": r1.h + 1, "fmt": "raw_f32", "caption": r1.caption},
+        ]
+    )
+    v = {r.image_id: r for r in validate_against(spark.createDataFrame(bad), reference).collect()}
+    for r in (r0, r1):
+        got = v[r.image_id]
+        assert not got.passes and not got.mask_equal and got.caption_equal
+        assert got.max_abs_diff is None and got.psnr_db is None
+    s = validation_summary(validate_against(spark.createDataFrame(bad), reference)).collect()[0]
+    assert s.n_rows == 2 and s.n_failing == 2
